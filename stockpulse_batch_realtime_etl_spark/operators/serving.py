@@ -66,38 +66,17 @@ def _window_filter(df: DataFrame, time_col: str, minutes: int) -> DataFrame:
     reference's ``event_time >= NOW() - interval`` with no upper bound),
     where as_of = max(time_col) — the deterministic stand-in for NOW() (F9).
 
-    Expressed as a SQL *scalar subquery* over a one-off temp view.  The
-    subquery executes once cluster-side and its result becomes a real
-    filter predicate on the main scan — one codegen'd stage.  The DataFrame
-    alternative (1-row aggregate + broadcast join) plans as
-    BroadcastNestedLoopJoin across three extra AQE stages and measured
-    4-6× slower at sf0.1; a window-function ``max() OVER ()`` would force
-    all rows through a single partition.  The view is session-scoped
-    metadata (no data is materialized or collected).
+    as_of is a *scalar subquery* (``DataFrame.scalar()``): it executes once
+    cluster-side and its result becomes a real filter predicate on the main
+    scan — one codegen'd stage.  The alternatives are slower: a 1-row
+    aggregate + broadcast join plans as BroadcastNestedLoopJoin across three
+    extra AQE stages (measured 4-6× slower at sf0.1), and a window-function
+    ``max() OVER ()`` would force all rows through a single partition.
     """
-    import uuid
-
-    name = "wf_" + uuid.uuid4().hex[:12]
-    df.createOrReplaceTempView(name)
-    out = df.sparkSession.sql(
-        f"""
-        SELECT * FROM {name}
-        WHERE {time_col} >= (SELECT max({time_col}) FROM {name})
-                            - INTERVAL {int(minutes)} MINUTES
-        """
+    as_of = df.select(F.max(time_col)).scalar()
+    return df.filter(
+        F.col(time_col) >= as_of - F.expr(f"INTERVAL {int(minutes)} MINUTES")
     )
-    # Classic PySpark analyzes spark.sql eagerly, so the view could be
-    # dropped here — but Spark CONNECT resolves the relation lazily at
-    # action time, and an immediate drop would land this exact code on
-    # 'table or view not found' on a connect cluster.  Dropping after
-    # capturing the analyzed plan keeps both modes safe; uuid names never
-    # collide, and the serving layer reuses one view name per call so the
-    # catalog stays bounded at the call concurrency, not call count.
-    try:
-        out.schema  # force analysis in both classic and connect modes
-    finally:
-        df.sparkSession.catalog.dropTempView(name)
-    return out
 
 
 # --- /symbols ---------------------------------------------------------------

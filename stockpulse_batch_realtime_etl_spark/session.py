@@ -15,6 +15,11 @@ equivalent "physical design" is a handful of deliberate Spark confs:
   specific partition count.
 * Arrow enabled — all pandas interchange (mapInPandas / applyInPandas in the
   multimodal + similarity extensions) is Arrow-batched, never row-at-a-time.
+
+Streaming state uses Spark's default HDFS-backed store provider; nothing
+here picks one.  Bounded streaming runs never write this session's conf:
+each runs on a child session with its own confs
+(``streaming.job._bounded_run_env``).
 """
 
 from __future__ import annotations
@@ -65,12 +70,6 @@ def get_spark(
         # rejects by default; read as long nanos and convert explicitly
         # (sources/tables.py) — truncation to µs matches DuckDB's read.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # Streaming state: RocksDB scales state size past executor heap at
-        # production cardinalities; harmless locally.
-        .config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
         .config("spark.sql.shuffle.spill.compress", "true")
         .config("spark.ui.enabled", "false")
         # local[N] runs every "executor" inside the driver JVM: 32 tasks

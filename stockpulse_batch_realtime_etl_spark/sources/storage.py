@@ -38,18 +38,6 @@ def write_ticks_partitioned(ticks: DataFrame, path: str) -> None:
     )
 
 
-def write_bars_partitioned(bars: DataFrame, path: str) -> None:
-    """Bars layout: ``path/symbol=X/bucket_date=D/`` (init.sql:27-28 analog)."""
-    (
-        bars.withColumn("bucket_date", F.to_date("bucket_start"))
-        .repartition("symbol", "bucket_date")
-        .sortWithinPartitions("bucket_start")
-        .write.mode("overwrite")
-        .partitionBy("symbol", "bucket_date")
-        .parquet(path)
-    )
-
-
 def read_ticks(spark: SparkSession, path: str) -> DataFrame:
     """Read the partitioned ticks table; symbol/event_date predicates become
     partition pruning, event_time predicates become row-group skipping."""

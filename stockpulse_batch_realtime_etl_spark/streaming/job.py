@@ -32,13 +32,12 @@ the surrounding plumbing is unchanged.)
 
 from __future__ import annotations
 
-import contextlib
 import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from stockpulse_batch_realtime_etl_spark.operators.ohlcv import bar_agg_exprs
 from stockpulse_batch_realtime_etl_spark.sources.dlq import split_raw_stream
@@ -199,7 +198,7 @@ _CORPUS_VERSION = "v2"
 
 
 def _ensure_corpus(
-    spark: SparkSession, sf_dir: str, with_redelivery: bool
+    spark: SparkSession, sf_dir: str, with_redelivery: bool = False
 ) -> str:
     """Materialize the Kafka-shaped JSON corpus for ``sf_dir`` ONCE and
     reuse it across queries and processes.
@@ -284,8 +283,11 @@ def _publish_atomic(dest: str, write_fn) -> None:
     both build; exactly one rename wins, the loser discards its copy —
     never an interleaved/overwritten shared directory."""
     import shutil
+    import uuid
 
-    tmp = f"{dest}.tmp.{os.getpid()}"
+    # unique per invocation, not per process: two threads of one process
+    # may publish the same dest (concurrent bounded runs on one session)
+    tmp = f"{dest}.tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
     shutil.rmtree(tmp, ignore_errors=True)
     write_fn(tmp)
     try:
@@ -311,8 +313,6 @@ def _publish_atomic(dest: str, write_fn) -> None:
     # a crash left an earlier same-pid tombstone behind) would otherwise
     # collide — os.rename onto an existing non-empty dir raises OSError,
     # which the except below would misread as "another process evicted it".
-    import uuid
-
     tomb = f"{dest}.stale.{os.getpid()}.{uuid.uuid4().hex[:8]}"
     try:
         os.rename(dest, tomb)
@@ -416,42 +416,45 @@ def _pin_daily_mtimes(dest: str) -> None:
     )
 
 
-@contextlib.contextmanager
 def _bounded_run_env(
     spark: SparkSession,
     sf_dir: str,
     base_dir: str | None,
     kind: str,
-    with_redelivery: bool = False,
-    keep_rocksdb: bool = False,
     skip_no_data_batch: bool = False,
-):
-    """Shared setup for a bounded (availableNow) streaming run over the
-    JSON corpus: materialize (or reuse) the corpus as text files, size
-    streaming state to the bounded corpus, and restore session conf after.
+) -> tuple[SparkSession, str, str]:
+    """Per-run footing for a bounded (availableNow) streaming run: a child
+    session carrying the run's own confs, plus its sink and checkpoint dirs.
 
-    State sizing: bounded backfill with bounded state → the memory-backed
-    store beats RocksDB, whose per-batch per-partition instance open/commit
-    overhead only pays off when state outgrows the executor heap; and state
-    partition count (fixed at the stream's FIRST batch from
-    spark.sql.shuffle.partitions) is sized to the corpus rather than the
-    cluster-wide default.  The session defaults (RocksDB, 32 partitions)
-    still govern continuous production streams.
+    The child (``spark.newSession()``) shares the SparkContext and the
+    cache but has its own SQL conf, so the run's settings stay with the run
+    — as a streaming query's settings stay with its own checkpoint — and
+    the caller's session is never written: nothing to restore, nothing
+    leaking into a concurrent query.  A child does not inherit confs the
+    caller set at run time (a bare harness session gets UTC only that way),
+    so the table-read preconditions are re-applied to it.
 
-    Yields ``(raw_path, out_dir, checkpoint_dir)``; out/checkpoint are
-    wiped per run (idempotence), the corpus is cached (_ensure_corpus).
+    Run confs: ``spark.sql.shuffle.partitions=8`` — a stream fixes its
+    state partition count at its first batch, so it is sized to the bounded
+    corpus rather than the cluster-wide default — and, with
+    ``skip_no_data_batch``, no trailing no-data micro-batch.  State lives in
+    Spark's default HDFS-backed store: the bounded state fits the heap.
+
+    Returns ``(run_session, out_dir, checkpoint_dir)``; out/checkpoint are
+    wiped per run (idempotence).  Each runner materializes the corpus it
+    reads on the run session (``_ensure_corpus`` / ``_ensure_daily_corpus``).
     """
     import hashlib
     import shutil
     import tempfile
 
-    overrides = {
-        "spark.sql.streaming.stateStore.providerClass": (
-            "org.apache.spark.sql.execution.streaming.state."
-            "HDFSBackedStateStoreProvider"
-        ),
-        "spark.sql.shuffle.partitions": "8",
-    }
+    from stockpulse_batch_realtime_etl_spark.sources.tables import (
+        _ensure_session_confs,
+    )
+
+    run = spark.newSession()
+    _ensure_session_confs(run)
+    run.conf.set("spark.sql.shuffle.partitions", "8")
     if skip_no_data_batch:
         # The trailing no-data micro-batch only advances the watermark to
         # flush withheld output (outer-join null rows, append-mode window
@@ -462,19 +465,7 @@ def _bounded_run_env(
         # plan+commit cycle (measured 1.3 s on the pair join).  Callers
         # that DO rely on the final flush (outer pair joins) keep the
         # default.
-        overrides["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
-    if keep_rocksdb:
-        # transformWithState is only supported on the RocksDB provider —
-        # set it EXPLICITLY (not merely "don't override"): an externally
-        # built session (the bare-harness case _ensure_session_confs
-        # supports) defaults to the HDFS-backed provider, which would fail
-        overrides["spark.sql.streaming.stateStore.providerClass"] = (
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider"
-        )
-    prev = {k: spark.conf.get(k, None) for k in overrides}
-    for k, v in overrides.items():
-        spark.conf.set(k, v)
+        run.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
 
     if base_dir is None:
         tag = hashlib.md5(f"{kind}:{sf_dir}".encode()).hexdigest()[:8]
@@ -488,15 +479,24 @@ def _bounded_run_env(
     # contains unrelated files)
     shutil.rmtree(out_dir, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
-    try:
-        raw_path = _ensure_corpus(spark, sf_dir, with_redelivery)
-        yield raw_path, out_dir, ckpt
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    return run, out_dir, ckpt
+
+
+def _drain(
+    spark: SparkSession, writer: DataStreamWriter, out_dir: str, ckpt: str
+) -> DataFrame:
+    """The one tail of a bounded run: start ``writer`` with availableNow on
+    ``ckpt``, wait until it has drained the corpus, then read ``out_dir``
+    back on the caller's session ``spark``.
+
+    Append-mode runs write through Spark's parquet file sink, whose
+    ``_spark_metadata`` log admits only committed files to the read-back;
+    ``foreachBatch`` remains for the modes the file sink rejects (update,
+    complete) and for the bars upsert (``start_bar_aggregation``)."""
+    writer.option("checkpointLocation", ckpt).trigger(
+        availableNow=True
+    ).start().awaitTermination()
+    return spark.read.parquet(out_dir)
 
 
 def run_pipeline_available_now(
@@ -514,24 +514,17 @@ def run_pipeline_available_now(
     sink live under ``base_dir`` (a deterministic temp dir, wiped per run
     for idempotence).
     """
-    with _bounded_run_env(
+    # update-mode upsert: every refinement emits in its batch
+    run, out_dir, ckpt = _bounded_run_env(
         spark, sf_dir, base_dir, "stream", skip_no_data_batch=True
-    ) as dirs:  # update-mode upsert: every refinement emits in its batch
-        raw_dir, out_dir, ckpt = dirs
-        ticks, _failed = tick_stream_from_raw(raw_json_stream(spark, raw_dir))
-        q = start_bar_aggregation(ticks, out_dir, ckpt, available_now=True)
-        q.awaitTermination()
-        bars_dir = out_dir
-    return spark.read.parquet(bars_dir).select(
-        "symbol",
-        "bucket_start",
-        "open",
-        "high",
-        "low",
-        "close",
-        "volume_sum",
-        "tick_count",
     )
+    raw = raw_json_stream(run, _ensure_corpus(run, sf_dir))
+    ticks, _failed = tick_stream_from_raw(raw)
+    # the _drain tail, with the aggregator service's own upsert writer
+    start_bar_aggregation(
+        ticks, out_dir, ckpt, available_now=True
+    ).awaitTermination()
+    return spark.read.parquet(out_dir).drop("bucket_date")
 
 
 def start_dlq_sink(
@@ -569,62 +562,48 @@ def run_session_bars_available_now(
     the corpus here; a continuous production stream would run append mode
     and accept watermark-delayed emission).
     """
-    with _bounded_run_env(
+    # complete mode: the final data batch already wrote the full table
+    run, out_dir, ckpt = _bounded_run_env(
         spark, sf_dir, base_dir, "sess", skip_no_data_batch=True
-    ) as (  # complete mode: the final data batch already wrote the full table
-        raw_dir,
-        out_dir,
-        ckpt,
-    ):
-        ticks, _failed = tick_stream_from_raw(raw_json_stream(spark, raw_dir))
-        sess = (
-            ticks.withWatermark("event_time", "2 minutes")
-            .groupBy(
-                F.col("symbol"),
-                F.session_window("event_time", gap).alias("w"),
-            )
-            .agg(*bar_agg_exprs())
-            .select(
-                "symbol",
-                F.col("w.start").alias("session_start"),
-                "open",
-                "high",
-                "low",
-                "close",
-                "volume_sum",
-                "tick_count",
-            )
+    )
+    raw = raw_json_stream(run, _ensure_corpus(run, sf_dir))
+    ticks, _failed = tick_stream_from_raw(raw)
+    sess = (
+        ticks.withWatermark("event_time", "2 minutes")
+        .groupBy(
+            F.col("symbol"),
+            F.session_window("event_time", gap).alias("w"),
         )
-
-        def _write_full(batch_df: DataFrame, _epoch: int) -> None:
-            batch_df.write.mode("overwrite").parquet(out_dir)
-
-        q = (
-            sess.writeStream.outputMode("complete")
-            .foreachBatch(_write_full)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        .agg(*bar_agg_exprs())
+        .select(
+            "symbol",
+            F.col("w.start").alias("session_start"),
+            "open",
+            "high",
+            "low",
+            "close",
+            "volume_sum",
+            "tick_count",
         )
-        q.awaitTermination()
-    return spark.read.parquet(out_dir)
+    )
+    writer = sess.writeStream.outputMode("complete").foreachBatch(
+        lambda df, _epoch: df.write.mode("overwrite").parquet(out_dir)
+    )
+    return _drain(spark, writer, out_dir, ckpt)
 
 
 def run_running_bars_available_now(
     spark: SparkSession,
     sf_dir: str,
     base_dir: str | None = None,
-    api: str = "apply_in_pandas_with_state",
 ) -> DataFrame:
     """Bounded run of a custom stateful operator: stream the wire corpus,
     fold per-symbol running OHLCV state across micro-batches, and return
     the FINAL running bar per symbol.
 
-    ``api`` selects the exemplar — ``"apply_in_pandas_with_state"``
-    (``streaming.stateful.running_bars``, the Spark 3.4+ GroupState form)
-    or ``"transform_with_state"`` (``running_bars_tws``, the Spark 4
-    StatefulProcessor form).  Both fold identically, so both are gated
-    against the SAME batch GROUP BY oracle.
+    The operator is ``streaming.stateful.running_bars`` (the GroupState
+    form); its ``transformWithState`` twin shares the fold but cannot run
+    here (see ``stateful.running_bars_tws``).
 
     Update-mode emission yields one row per active symbol per batch; the
     final answer is the row with the highest tick_count per symbol
@@ -633,43 +612,20 @@ def run_running_bars_available_now(
     event_time, integer sums, min/max — so the result provably equals the
     batch GROUP BY over the same ticks, which is what the oracle checks.
     """
-    from stockpulse_batch_realtime_etl_spark.streaming import stateful
+    from stockpulse_batch_realtime_etl_spark.streaming.stateful import (
+        running_bars,
+    )
 
-    operators = {
-        "apply_in_pandas_with_state": stateful.running_bars,
-        "transform_with_state": stateful.running_bars_tws,
-    }
-    running_bars = operators[api]
-
-    with _bounded_run_env(
-        spark,
-        sf_dir,
-        base_dir,
-        f"stateful_{api}",
-        keep_rocksdb=(api == "transform_with_state"),
-    ) as (
-        raw_dir,
-        out_dir,
-        ckpt,
-    ):
-        ticks, _failed = tick_stream_from_raw(raw_json_stream(spark, raw_dir))
-        bars = running_bars(
-            ticks.select("symbol", "price", "volume", "event_time")
-        )
-        def _append(batch_df: DataFrame, _epoch: int) -> None:
-            # parquet sinks reject update mode; foreachBatch append keeps
-            # every batch's emission for the final latest-per-symbol reduce
-            batch_df.write.mode("append").parquet(out_dir)
-
-        q = (
-            bars.writeStream.outputMode("update")
-            .foreachBatch(_append)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    emitted = spark.read.parquet(out_dir)
+    run, out_dir, ckpt = _bounded_run_env(spark, sf_dir, base_dir, "stateful")
+    raw = raw_json_stream(run, _ensure_corpus(run, sf_dir))
+    ticks, _failed = tick_stream_from_raw(raw)
+    bars = running_bars(ticks.select("symbol", "price", "volume", "event_time"))
+    # parquet sinks reject update mode; foreachBatch append keeps every
+    # batch's emission for the final latest-per-symbol reduce
+    writer = bars.writeStream.outputMode("update").foreachBatch(
+        lambda df, _epoch: df.write.mode("append").parquet(out_dir)
+    )
+    emitted = _drain(spark, writer, out_dir, ckpt)
     final = emitted.groupBy("symbol").agg(
         F.max_by(
             F.struct(
@@ -699,33 +655,21 @@ def run_dedup_available_now(
     the watermark — at production rates, minutes of keys, not the stream's
     history.
     """
-    with _bounded_run_env(
-        spark,
-        sf_dir,
-        base_dir,
-        "dedup",
-        with_redelivery=True,
-        # dropDuplicates emits each first-seen row in its own batch; the
-        # trailing no-data batch only GCs state
-        skip_no_data_batch=True,
-    ) as (raw_dir, out_dir, ckpt):
-        # raw_dir is the {base,extra} glob: corpus + the redelivered slice
-        ticks, _failed = tick_stream_from_raw(raw_json_stream(spark, raw_dir))
-        deduped = (
-            ticks.select("symbol", "event_time")
-            .withWatermark("event_time", "2 minutes")
-            .dropDuplicates(["symbol", "event_time"])
-        )
-        q = (
-            deduped.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .format("parquet")
-            .option("path", out_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(out_dir)
+    # dropDuplicates emits each first-seen row in its own batch; the
+    # trailing no-data batch only GCs state
+    run, out_dir, ckpt = _bounded_run_env(
+        spark, sf_dir, base_dir, "dedup", skip_no_data_batch=True
+    )
+    # the {base,extra} glob: corpus + the redelivered slice
+    raw = raw_json_stream(run, _ensure_corpus(run, sf_dir, with_redelivery=True))
+    ticks, _failed = tick_stream_from_raw(raw)
+    deduped = (
+        ticks.select("symbol", "event_time")
+        .withWatermark("event_time", "2 minutes")
+        .dropDuplicates(["symbol", "event_time"])
+    )
+    writer = deduped.writeStream.format("parquet").option("path", out_dir)
+    return _drain(spark, writer, out_dir, ckpt)
 
 
 def run_metrics_probe(
@@ -749,35 +693,27 @@ def run_metrics_probe(
     main.py:47-67) does not depend on the transformation, and the cheapest
     pipeline keeps the 30-batch bounded run fast at any sf.
     """
-    import shutil
-    import tempfile
+    import json
     import time as _time
 
     from stockpulse_batch_realtime_etl_spark.streaming import metrics
 
-    corpus_dir = _ensure_daily_corpus(spark, sf_dir)
-    tag = _corpus_tag(sf_dir, extra_key="metrics")
-    if base_dir is None:
-        base_dir = os.path.join(tempfile.gettempdir(), f"stockpulse_metrics_{tag}")
-    shutil.rmtree(base_dir, ignore_errors=True)
-    ckpt = os.path.join(base_dir, "ckpt")
-
+    # the gated summary counts only rows>0 batches (and the oracle counts
+    # days), so the trailing zero-row no-data batch is pure overhead here
+    run, _out_dir, ckpt = _bounded_run_env(
+        spark, sf_dir, base_dir, "metrics", skip_no_data_batch=True
+    )
+    corpus_dir = _ensure_daily_corpus(run, sf_dir)
     n_days = len(
         [d for d in os.listdir(corpus_dir) if d.startswith("day=")]
     )
     # size the listener ring to the batch count: the default 256 would
-    # silently evict the earliest day-batches at larger sf
-    listener = metrics.attach(spark, max_batches=max(256, 2 * n_days))
-    # the gated summary counts only rows>0 batches (and the oracle counts
-    # days), so the trailing zero-row no-data batch is pure overhead here
-    _ndb_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    _ndb_prev = spark.conf.get(_ndb_key, None)
-    spark.conf.set(_ndb_key, "false")
+    # silently evict the earliest day-batches at larger sf.  It listens on
+    # the run session, so it sees this run's batches and no one else's.
+    listener = metrics.attach(run, max_batches=max(256, 2 * n_days))
     try:
         q = (
-            spark.readStream.format("text")
-            .option("maxFilesPerTrigger", 1)
-            .load(corpus_dir)
+            raw_json_stream(run, corpus_dir, max_files_per_trigger=1)
             .select("value")
             .writeStream.queryName("metrics_probe")
             .format("noop")
@@ -792,20 +728,13 @@ def run_metrics_probe(
         # keyed by batch_id)
         deadline = _time.monotonic() + 30
         def _probe_rows():
-            return [
-                r
-                for r in listener.snapshot()
-                if r["query_name"] == "metrics_probe"
-                and r["num_input_rows"] > 0
-            ]
+            return [r for r in listener.snapshot() if r["num_input_rows"] > 0]
         while len(_probe_rows()) < n_days and _time.monotonic() < deadline:
             _time.sleep(0.2)
         rows = {r["batch_id"]: r for r in _probe_rows()}
         if len(rows) < n_days:  # pragma: no cover - listener-bus straggler
-            import json as _json
-
             for p in q.recentProgress:
-                p = _json.loads(p) if isinstance(p, str) else p
+                p = json.loads(p) if isinstance(p, str) else p
                 if p.get("numInputRows", 0) > 0:
                     rows.setdefault(
                         p["batchId"],
@@ -824,11 +753,7 @@ def run_metrics_probe(
                         },
                     )
     finally:
-        if _ndb_prev is None:
-            spark.conf.unset(_ndb_key)
-        else:
-            spark.conf.set(_ndb_key, _ndb_prev)
-        metrics.detach(spark, listener)
+        metrics.detach(run, listener)
     if len(rows) < n_days:
         raise RuntimeError(
             f"metrics probe captured {len(rows)}/{n_days} day-batches — "
@@ -897,17 +822,16 @@ def run_sector_rollup_available_now(
     session-bars pattern); the final table equals the batch join+GROUP BY
     the oracle runs.
     """
+    # complete mode: the final data batch already wrote the full table
+    run, out_dir, ckpt = _bounded_run_env(
+        spark, sf_dir, base_dir, "sector", skip_no_data_batch=True
+    )
     # cache: Structured Streaming re-evaluates an uncached static plan
     # (full corpus decode + distinct + broadcast rebuild) EVERY micro-batch
-    dim = symbol_sector_dim(spark, sf_dir).cache()
-    with _bounded_run_env(
-        spark, sf_dir, base_dir, "sector", skip_no_data_batch=True
-    ) as (  # complete mode: the final data batch already wrote the full table
-        raw_dir,
-        out_dir,
-        ckpt,
-    ):
-        ticks, _failed = tick_stream_from_raw(raw_json_stream(spark, raw_dir))
+    dim = symbol_sector_dim(run, sf_dir).cache()
+    try:
+        raw = raw_json_stream(run, _ensure_corpus(run, sf_dir))
+        ticks, _failed = tick_stream_from_raw(raw)
         rollup = (
             ticks.withWatermark("event_time", "2 minutes")
             .join(F.broadcast(dim), "symbol")
@@ -934,24 +858,14 @@ def run_sector_rollup_available_now(
                 "tick_count",
             )
         )
-
-        def _write_full(batch_df: DataFrame, _epoch: int) -> None:
-            batch_df.write.mode("overwrite").parquet(out_dir)
-
-        try:
-            q = (
-                rollup.writeStream.outputMode("complete")
-                .foreachBatch(_write_full)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            # unpersist even when the stream raises — the cached dim would
-            # otherwise pin executor memory for the life of the session
-            dim.unpersist()
-    return spark.read.parquet(out_dir)
+        writer = rollup.writeStream.outputMode("complete").foreachBatch(
+            lambda df, _epoch: df.write.mode("overwrite").parquet(out_dir)
+        )
+        return _drain(spark, writer, out_dir, ckpt)
+    finally:
+        # unpersist even when the stream raises — the cached dim would
+        # otherwise pin executor memory for the life of the session
+        dim.unpersist()
 
 
 def run_stream_stream_join_available_now(
@@ -1002,7 +916,7 @@ def run_stream_stream_join_available_now(
         "right_outer": "ssjoin_ro",
         "full_outer": "ssjoin_fo",
     }
-    with _bounded_run_env(
+    run, out_dir, ckpt = _bounded_run_env(
         spark,
         sf_dir,
         base_dir,
@@ -1011,58 +925,44 @@ def run_stream_stream_join_available_now(
         # the final no-data batch's watermark advance to flush their
         # null-padded rows and MUST keep it
         skip_no_data_batch=(how == "inner"),
-    ) as (
-        raw_dir,
-        out_dir,
-        ckpt,
-    ):
-        ticks, _failed = tick_stream_from_raw(raw_json_stream(spark, raw_dir))
-        # each stream may carry at most ONE event-time column into the
-        # join: the window struct inherits the watermark, so the raw
-        # timestamps ride along as plain epoch-µs longs and are re-cast
-        # after the bounded run completes
-        left = (
-            ticks.filter(F.col("symbol") == left_symbol)
-            .withWatermark("event_time", "2 minutes")
-            .select(
-                F.window("event_time", "1 minute").alias("w"),
-                F.col("price").alias("purchase_price"),
-                F.unix_micros("event_time").alias("purchase_us"),
-            )
+    )
+    raw = raw_json_stream(run, _ensure_corpus(run, sf_dir))
+    ticks, _failed = tick_stream_from_raw(raw)
+    # each stream may carry at most ONE event-time column into the
+    # join: the window struct inherits the watermark, so the raw
+    # timestamps ride along as plain epoch-µs longs and are re-cast
+    # after the bounded run completes
+    left = (
+        ticks.filter(F.col("symbol") == left_symbol)
+        .withWatermark("event_time", "2 minutes")
+        .select(
+            F.window("event_time", "1 minute").alias("w"),
+            F.col("price").alias("purchase_price"),
+            F.unix_micros("event_time").alias("purchase_us"),
         )
-        right = (
-            ticks.filter(F.col("symbol") == right_symbol)
-            .withWatermark("event_time", "2 minutes")
-            .select(
-                F.window("event_time", "1 minute").alias("w2"),
-                F.col("price").alias("click_price"),
-                F.unix_micros("event_time").alias("click_us"),
-            )
+    )
+    right = (
+        ticks.filter(F.col("symbol") == right_symbol)
+        .withWatermark("event_time", "2 minutes")
+        .select(
+            F.window("event_time", "1 minute").alias("w2"),
+            F.col("price").alias("click_price"),
+            F.unix_micros("event_time").alias("click_us"),
         )
-        # outer variants: an unmatched row's opposite-side window struct is
-        # NULL, so bucket_start coalesces across the two (equal when matched)
-        joined = left.join(right, F.col("w") == F.col("w2"), how).select(
-            F.coalesce(F.col("w.start"), F.col("w2.start")).alias(
-                "bucket_start"
-            ),
-            "purchase_us",
-            "purchase_price",
-            "click_us",
-            "click_price",
-        )
-
-        def _append(batch_df: DataFrame, _epoch: int) -> None:
-            batch_df.write.mode("append").parquet(out_dir)
-
-        q = (
-            joined.writeStream.outputMode("append")
-            .foreachBatch(_append)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(out_dir).select(
+    )
+    # outer variants: an unmatched row's opposite-side window struct is
+    # NULL, so bucket_start coalesces across the two (equal when matched)
+    joined = left.join(right, F.col("w") == F.col("w2"), how).select(
+        F.coalesce(F.col("w.start"), F.col("w2.start")).alias(
+            "bucket_start"
+        ),
+        "purchase_us",
+        "purchase_price",
+        "click_us",
+        "click_price",
+    )
+    writer = joined.writeStream.format("parquet").option("path", out_dir)
+    return _drain(spark, writer, out_dir, ckpt).select(
         "bucket_start",
         F.timestamp_micros(F.col("purchase_us")).alias("purchase_time"),
         "purchase_price",
@@ -1128,68 +1028,54 @@ def run_stream_stream_interval_join_available_now(
     per-key arrival rate — the attribution window is the capacity knob,
     exactly how production click-attribution pipelines are sized.
     """
-    daily_dir = _ensure_daily_corpus(spark, sf_dir)
-    with _bounded_run_env(
+    # inner interval join: matches emit in-batch
+    run, out_dir, ckpt = _bounded_run_env(
         spark, sf_dir, base_dir, "ssjoin_iv", skip_no_data_batch=True
-    ) as (  # inner interval join: matches emit in-batch
-        _raw_dir,
-        out_dir,
-        ckpt,
-    ):
-        ticks, _failed = tick_stream_from_raw(
-            raw_json_stream(
-                spark, daily_dir, max_files_per_trigger=files_per_trigger
-            ).select("value")
+    )
+    raw = raw_json_stream(
+        run,
+        _ensure_daily_corpus(run, sf_dir),
+        max_files_per_trigger=files_per_trigger,
+    ).select("value")
+    ticks, _failed = tick_stream_from_raw(raw)
+    key = F.pmod(F.floor("price").cast("long"), key_buckets)
+    left = (
+        ticks.filter(F.col("symbol") == left_symbol)
+        .withWatermark("event_time", "2 minutes")
+        .select(
+            key.alias("user_key"),
+            F.col("event_time").alias("purchase_time"),
+            F.col("price").alias("purchase_price"),
         )
-        key = F.pmod(F.floor("price").cast("long"), key_buckets)
-        left = (
-            ticks.filter(F.col("symbol") == left_symbol)
-            .withWatermark("event_time", "2 minutes")
-            .select(
-                key.alias("user_key"),
-                F.col("event_time").alias("purchase_time"),
-                F.col("price").alias("purchase_price"),
-            )
+    )
+    right = (
+        ticks.filter(F.col("symbol") == right_symbol)
+        .withWatermark("event_time", "2 minutes")
+        .select(
+            key.alias("user_key2"),
+            F.col("event_time").alias("click_time"),
+            F.col("price").alias("click_price"),
         )
-        right = (
-            ticks.filter(F.col("symbol") == right_symbol)
-            .withWatermark("event_time", "2 minutes")
-            .select(
-                key.alias("user_key2"),
-                F.col("event_time").alias("click_time"),
-                F.col("price").alias("click_price"),
-            )
-        )
-        joined = left.join(
-            right,
-            (F.col("user_key") == F.col("user_key2"))
-            & (F.col("purchase_time") >= F.col("click_time"))
-            & (
-                F.col("purchase_time")
-                <= F.col("click_time")
-                + F.expr(f"INTERVAL {attribution_minutes} MINUTES")
-            ),
-            "inner",
-        ).select(
-            "user_key",
-            F.unix_micros("purchase_time").alias("purchase_us"),
-            "purchase_price",
-            F.unix_micros("click_time").alias("click_us"),
-            "click_price",
-        )
-
-        def _append(batch_df: DataFrame, _epoch: int) -> None:
-            batch_df.write.mode("append").parquet(out_dir)
-
-        q = (
-            joined.writeStream.outputMode("append")
-            .foreachBatch(_append)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(out_dir).select(
+    )
+    joined = left.join(
+        right,
+        (F.col("user_key") == F.col("user_key2"))
+        & (F.col("purchase_time") >= F.col("click_time"))
+        & (
+            F.col("purchase_time")
+            <= F.col("click_time")
+            + F.expr(f"INTERVAL {attribution_minutes} MINUTES")
+        ),
+        "inner",
+    ).select(
+        "user_key",
+        F.unix_micros("purchase_time").alias("purchase_us"),
+        "purchase_price",
+        F.unix_micros("click_time").alias("click_us"),
+        "click_price",
+    )
+    writer = joined.writeStream.format("parquet").option("path", out_dir)
+    return _drain(spark, writer, out_dir, ckpt).select(
         "user_key",
         F.timestamp_micros(F.col("purchase_us")).alias("purchase_time"),
         "purchase_price",

@@ -67,10 +67,9 @@ def test_tick_summary_empty_window_is_empty(make_ticks):
 
 
 def test_window_filter_no_catalog_growth(ticks):
-    """_window_filter drops its temp view after plan construction: a
-    long-lived serving session issuing thousands of windowed queries must
-    not leak catalog entries, and the returned plan must still execute
-    after the drop (spark.sql resolves eagerly)."""
+    """_window_filter registers nothing in the catalog: a long-lived
+    serving session issuing thousands of windowed queries must not leak
+    catalog entries, and every returned plan must execute."""
     spark = ticks.sparkSession
     before = {t.name for t in spark.catalog.listTables()}
     dfs = [serving._window_filter(ticks, "event_time", 60) for _ in range(50)]

@@ -818,3 +818,183 @@ def test_stream_stream_full_outer_join_both_side_null_emission(spark):
     )
     assert left_nulls == want_left and len(left_nulls) > 0
     assert right_nulls == want_right and len(right_nulls) > 0
+
+
+_RUN_CONFS = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.streaming.noDataMicroBatches.enabled",
+)
+
+
+def test_bounded_run_leaves_caller_conf_untouched(spark, monkeypatch):
+    """A bounded run sets its confs on its own child session: while the
+    stream is being built, the caller's session keeps its own values and
+    the run's session carries the run's."""
+    caller = spark.newSession()
+    caller.conf.set("spark.sql.shuffle.partitions", "13")
+    before = {k: caller.conf.get(k) for k in _RUN_CONFS}
+    seen = {}
+    real = job.tick_stream_from_raw
+
+    def spy(raw):
+        seen["caller"] = {k: caller.conf.get(k) for k in _RUN_CONFS}
+        seen["run"] = {k: raw.sparkSession.conf.get(k) for k in _RUN_CONFS}
+        return real(raw)
+
+    monkeypatch.setattr(job, "tick_stream_from_raw", spy)
+    bars = job.run_pipeline_available_now(caller, "/root/testdata/sf0.001")
+    assert bars.count() > 0
+    assert seen["caller"] == before == {
+        "spark.sql.shuffle.partitions": "13",
+        "spark.sql.streaming.noDataMicroBatches.enabled": "true",
+    }
+    assert seen["run"] == {
+        "spark.sql.shuffle.partitions": "8",
+        "spark.sql.streaming.noDataMicroBatches.enabled": "false",
+    }
+    assert {k: caller.conf.get(k) for k in _RUN_CONFS} == before
+
+
+def _norm_rows(cols, rows):
+    def cell(v):
+        if v is None:
+            return "NULL"
+        return f"{v:.6g}" if isinstance(v, float) else str(v)
+
+    order = sorted(range(len(cols)), key=lambda i: cols[i])
+    return sorted("|".join(cell(r[i]) for i in order) for r in rows)
+
+
+def test_concurrent_bounded_runs_match_oracles(spark):
+    """Two bounded runs started from two threads on ONE session — one that
+    skips the trailing no-data batch and one whose outer-join rows depend
+    on it — both equal their DuckDB oracles."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    import duckdb
+
+    import __spark_entry__ as entry_mod
+    from stockpulse_batch_realtime_etl_spark.schemas import TESTDATA_TABLES
+
+    sf = "/root/testdata/sf0.001"
+    names = ["streaming_dedup_ticks", "streaming_pair_join_outer"]
+    queries = entry_mod.queries()
+
+    def run(name):
+        df = queries[name](spark, sf)
+        return _norm_rows(df.columns, df.collect())
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        got = dict(zip(names, pool.map(run, names)))
+
+    con = duckdb.connect()
+    for t in TESTDATA_TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"
+        )
+    for name in names:
+        rel = con.execute(entry_mod.oracle_sql()[name])
+        want = _norm_rows([d[0] for d in rel.description], rel.fetchall())
+        assert got[name] == want and want, name
+
+
+_BAR_COLS = (
+    "symbol", "bucket_start", "open", "high", "low", "close",
+    "volume_sum", "tick_count",
+)
+
+
+# four micro-batches (one file each); later files carry late ticks for bars
+# that earlier batches already upserted, all within the 10-minute watermark
+_FAULT_FILES = [
+    [
+        tick_json("AAPL", 190.0, 100, 0, 10),
+        tick_json("AAPL", 191.0, 200, 0, 40),
+        tick_json("AAPL", 192.0, 300, 1, 5),
+        tick_json("MSFT", 415.0, 50, 0, 20),
+    ],
+    [
+        tick_json("AAPL", 193.0, 100, 2, 0),
+        tick_json("AAPL", 189.0, 100, 2, 30),
+        tick_json("MSFT", 416.0, 60, 1, 50),
+        tick_json("AAPL", 188.0, 10, 0, 55),
+    ],
+    [
+        tick_json("AAPL", 195.0, 100, 3, 15),
+        tick_json("MSFT", 417.0, 70, 3, 0),
+        tick_json("AAPL", 187.0, 20, 1, 30),
+        tick_json("MSFT", 414.0, 30, 0, 5),
+        '{"broken json',
+    ],
+    [
+        tick_json("AAPL", 196.0, 100, 4, 0),
+        tick_json("AAPL", 190.5, 40, 2, 45),
+    ],
+]
+
+
+def test_upsert_exactly_once_after_injected_failure(spark, tmp_path, monkeypatch):
+    """The upsert of batch k writes the sink and then fails, so the batch
+    is in the offset log but not the commit log.  Restarting from the same
+    checkpoint replays batch k; the final bars equal an uninterrupted run
+    and batch ``ohlcv_bars`` over the same ticks."""
+    import os
+
+    from pyspark.errors import StreamingQueryException
+
+    assert "HDFSBacked" in spark.conf.get(
+        "spark.sql.streaming.stateStore.providerClass"
+    )
+    src = tmp_path / "src"
+    src.mkdir()
+    for i, lines in enumerate(_FAULT_FILES):
+        f = src / f"part{i}.jsonl"
+        f.write_text("\n".join(lines))
+        os.utime(f, (1_000_000_000 + i, 1_000_000_000 + i))  # discovery order
+
+    def run(table, ckpt):
+        raw = job.raw_json_stream(spark, str(src), max_files_per_trigger=1)
+        ticks, _failed = job.tick_stream_from_raw(raw)
+        job.start_bar_aggregation(
+            ticks, table, ckpt, watermark="10 minutes", available_now=True
+        ).awaitTermination()
+
+    def bars(table):
+        return {
+            (r.symbol, r.bucket_start): tuple(r)
+            for r in spark.read.parquet(table)
+            .select(*_BAR_COLS)
+            .collect()
+        }
+
+    run(str(tmp_path / "clean"), str(tmp_path / "clean_ckpt"))
+
+    k = 3  # batch_id 2: its late ticks rewrite bars batches 0-1 wrote
+    real = job.upsert_bars_batch
+    calls = []
+
+    def write_then_fail(batch, table_path, audit_path=None):
+        real(batch, table_path, audit_path)
+        calls.append(1)
+        if len(calls) == k:
+            raise RuntimeError("injected failure after the sink write")
+
+    monkeypatch.setattr(job, "upsert_bars_batch", write_then_fail)
+    table, ckpt = str(tmp_path / "bars"), str(tmp_path / "ckpt")
+    with pytest.raises(StreamingQueryException):
+        run(table, ckpt)
+    assert os.path.exists(os.path.join(ckpt, "offsets", str(k - 1)))
+    assert not os.path.exists(os.path.join(ckpt, "commits", str(k - 1)))
+
+    run(table, ckpt)  # restart: replays batch k-1, then the rest
+    assert len(calls) > k
+    got = bars(table)
+    assert got == bars(str(tmp_path / "clean"))
+
+    ticks = split_raw_stream(spark.read.text(str(src))).ticks
+    want = {
+        (r.symbol, r.bucket_start): tuple(r)
+        for r in ohlcv_bars(ticks).select(*_BAR_COLS).collect()
+    }
+    assert got == want and len(want) == 8
+
