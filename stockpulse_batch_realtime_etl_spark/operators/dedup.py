@@ -26,7 +26,10 @@ arithmetic — portable to any SQL engine (no hex-cast builtins needed).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import time
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from stockpulse_batch_realtime_etl_spark.sources.tables import fan_out
@@ -392,6 +395,24 @@ def simhash_dup_groups(docs: DataFrame, bits: int = 16) -> DataFrame:
 
 # --- duplicate-group resolution (connected components) ----------------------
 
+#: Bound on the wait for an observed metric after its action has run.  The
+#: metric normally lands with the action (first poll); the bound turns a
+#: lost metric into one explicit count job instead of an endless wait.
+_OBSERVATION_WAIT_S = 10.0
+
+
+def _observed(obs: Observation, name: str, fallback: Callable[[], int]) -> int:
+    """``obs.get[name]`` with a deadline.  ``Observation.get`` blocks with
+    no timeout; each ``getRowOrEmpty`` poll waits at most 100 ms, so this
+    loop ends at the deadline and returns ``fallback()`` — an explicit
+    count over the same checkpointed rows — instead."""
+    deadline = time.monotonic() + _OBSERVATION_WAIT_S
+    while time.monotonic() < deadline:
+        if obs._jo.getRowOrEmpty().isDefined():
+            return obs.get[name]
+    return fallback()
+
+
 def _cc_min_label(edges: DataFrame, max_iter: int) -> DataFrame:
     """Min-label propagation over a SYMMETRIC edge list → (doc_id, group_id)
     for every edge-endpoint node.
@@ -421,8 +442,6 @@ def _cc_min_label(edges: DataFrame, max_iter: int) -> DataFrame:
         # the dedup trio at ~50% of wall in INTER-JOB gaps, so halving the
         # job count per round attacks exactly that, and the changed-count
         # value is identical (same rows, same flag).
-        from pyspark.sql import Observation
-
         obs = Observation()
         stepped = (
             labels.join(nbr_min, labels["doc_id"] == nbr_min["src"], "left")
@@ -439,7 +458,9 @@ def _cc_min_label(edges: DataFrame, max_iter: int) -> DataFrame:
             .observe(obs, F.sum(F.col("chg").cast("long")).alias("changed"))
             .localCheckpoint()
         )
-        changed = obs.get["changed"] or 0
+        changed = _observed(
+            obs, "changed", lambda: stepped.filter("chg").count()
+        ) or 0
         labels = stepped.drop("chg")
         # superseded generations: localCheckpoint blocks are reclaimed by
         # the ContextCleaner once the old DataFrame reference (reassigned
@@ -478,8 +499,6 @@ def _cc_star(edges: DataFrame, max_iter: int) -> DataFrame:
     is idempotent under both operations, so a spurious extra round is a
     no-op, never a wrong answer.
     """
-    from pyspark.sql import Observation
-
     # canonical larger→smaller direction, deduped.  Edge counts ride each
     # checkpoint job as observed metrics (same fuse as _cc_min_label): the
     # count-equality half of the convergence test then costs zero extra
@@ -492,7 +511,7 @@ def _cc_star(edges: DataFrame, max_iter: int) -> DataFrame:
         .observe(obs0, F.count(F.lit(1)).alias("n"))
         .localCheckpoint()
     )
-    cur_cnt = obs0.get["n"]
+    cur_cnt = _observed(obs0, "n", cur.count)
     for _ in range(max_iter):
         # --- large-star: symmetric neighborhoods
         sym = cur.unionAll(
@@ -529,7 +548,7 @@ def _cc_star(edges: DataFrame, max_iter: int) -> DataFrame:
             .observe(obs, F.count(F.lit(1)).alias("n"))
             .localCheckpoint()
         )
-        nxt_cnt = obs.get["n"]
+        nxt_cnt = _observed(obs, "n", nxt.count)
         if nxt_cnt == cur_cnt and nxt.exceptAll(cur).isEmpty():
             cur = nxt
             break
@@ -595,7 +614,6 @@ def dup_groups(
     """
     if method not in ("auto", "min_label", "star"):
         raise ValueError(f"unknown dup_groups method: {method!r}")
-    from pyspark.sql import Observation
 
     # ONE materialization job for the whole LSH pipeline: checkpoint the
     # pair list itself (truncating the plan Catalyst would otherwise
@@ -608,14 +626,14 @@ def dup_groups(
     # recomputed per CC round for the cost of a map over materialized
     # partitions.  (On a production cluster use a reliable checkpoint dir
     # for fault tolerance; the algorithm is unchanged.)
-    obs = Observation()
-    pairs = (
-        lsh_candidate_pairs(docs, num_hashes, band_size, n)
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
-    )
+    pairs = lsh_candidate_pairs(docs, num_hashes, band_size, n)
     if method == "auto":
-        method = "star" if obs.get["n"] >= STAR_EDGE_THRESHOLD else "min_label"
+        obs = Observation()
+        pairs = pairs.observe(obs, F.count(F.lit(1)).alias("n"))
+    pairs = pairs.localCheckpoint()
+    if method == "auto":
+        n_pairs = _observed(obs, "n", pairs.count)
+        method = "star" if n_pairs >= STAR_EDGE_THRESHOLD else "min_label"
     fwd = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     rev = pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
     edges = fwd.unionAll(rev)

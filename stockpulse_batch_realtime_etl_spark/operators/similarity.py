@@ -146,95 +146,6 @@ def brute_force_topk(
     )
 
 
-def brute_force_topk_np(
-    embeddings: DataFrame, query_ids: list[int], k: int = 5
-) -> DataFrame:
-    """Vectorized scale path of ``brute_force_topk``: identical semantics,
-    but the query×corpus scoring runs as ONE numpy matmul per Arrow batch
-    inside ``mapInPandas`` instead of per-pair Catalyst expressions.
-
-    Shape: queries are collected to a (q×d) matrix and closed over (the
-    query set is top-k-sized by definition — this is the one deliberate
-    driver-side transfer, same size as a broadcast); the corpus streams
-    through in Arrow batches, each batch scoring (batch×d)·(d×q) in BLAS and
-    emitting only its per-query top-k candidates.  The final exact top-k
-    over (partitions × q × k) survivors is a tiny Catalyst ranking.  At
-    100 TB this is the practical exact-search form: ~10-100× the per-pair
-    HOF throughput, no corpus shuffle, partial top-k pushed into the scan
-    stage.  Results are bit-identical to ``brute_force_topk`` (same double
-    math, same 6dp rounding, same tie-break) — asserted in tests.
-    """
-    import numpy as np
-
-    q_rows = (
-        embeddings.filter(F.col("vec_id").isin(query_ids))
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    if not q_rows:  # the Catalyst twin returns empty too, not an axis error
-        return embeddings.sparkSession.createDataFrame(
-            [], "query_id long, cand_id long, cos_sim double, rank int"
-        )
-    q_ids = np.array([r.vec_id for r in q_rows], dtype="int64")
-    q_mat = np.array([r.embedding for r in q_rows], dtype="float64")
-    q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
-
-    def score(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            c_ids = pdf["vec_id"].to_numpy(dtype="int64")
-            c_mat = np.array(list(pdf["embedding"]), dtype="float64")
-            c_norm = np.sqrt((c_mat * c_mat).sum(axis=1))
-            with np.errstate(divide="ignore", invalid="ignore"):
-                raw = (c_mat @ q_mat.T) / np.outer(c_norm, q_norm)
-            # HALF_UP to 6dp (F.round's decimal mode), not np.round's
-            # banker's rounding; then zero-norm pairs → NaN → emitted as
-            # NULL cos_sim exactly like the try_divide Catalyst twin
-            sims = np.sign(raw) * np.floor(np.abs(raw) * 1e6 + 0.5) / 1e6
-            sims[~np.isfinite(raw)] = np.nan
-            for qi, qid in enumerate(q_ids):
-                col = sims[:, qi]
-                mask = c_ids != qid
-                ids, vals = c_ids[mask], col[mask]
-                if len(ids) == 0:
-                    continue
-                # partial top-k per batch (cos desc NULLS LAST, cand_id
-                # asc): keep k non-null best plus the first k null-cos
-                # candidates — null rows can still reach the global top-k
-                # when a query has fewer than k scored candidates
-                nn = ~np.isnan(vals)
-                keep_nn = np.lexsort((ids[nn], -vals[nn]))[:k]
-                out_ids = list(ids[nn][keep_nn])
-                out_vals = list(vals[nn][keep_nn])
-                null_ids = np.sort(ids[~nn])[:k]
-                out_ids += list(null_ids)
-                out_vals += [None] * len(null_ids)
-                if not out_ids:
-                    continue
-                yield pd.DataFrame(
-                    {
-                        "query_id": qid,
-                        "cand_id": np.array(out_ids, dtype="int64"),
-                        "cos_sim": pd.array(out_vals, dtype="Float64"),
-                    }
-                )
-
-    survivors = fan_out(embeddings.select("vec_id", "embedding")).mapInPandas(
-        score, "query_id long, cand_id long, cos_sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("cand_id").asc()
-    )
-    return (
-        survivors.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cos_sim", "rank")
-    )
-
-
 def _sign_bucket(emb: Column, nbits: int) -> Column:
     """Hyperplane-sign LSH bucket id: bit i = [embedding[i] >= 0]."""
     bucket = F.lit(0)
@@ -1448,12 +1359,11 @@ def _pairs_above_threshold_np(vecs: DataFrame, threshold: float) -> DataFrame:
 
     The vector set must be BOUNDED by the caller (semdedup's
     ``truth_cap`` — ≤ 4000 rows ≈ 2 MB): it is collected once and closed
-    over, the same deliberate driver-side transfer
-    :func:`brute_force_topk_np` makes for its query matrix.  Cosine math
-    mirrors ``_cos_precomputed`` exactly the way ``brute_force_topk_np``
-    does (double matmul, HALF_UP 6dp via sign·floor(|x|·10⁶+0.5)/10⁶,
-    zero-norm → NaN which fails the ≥ threshold test just like the
-    Catalyst NULL).
+    over, a deliberate driver-side transfer the size of a broadcast.
+    Cosine math mirrors ``_cos_precomputed`` exactly (double matmul,
+    HALF_UP 6dp via sign·floor(|x|·10⁶+0.5)/10⁶ — ``F.round``'s decimal
+    mode, not numpy's banker's rounding — and zero-norm → NaN, which fails
+    the ≥ threshold test just like the Catalyst NULL).
     """
     import numpy as np
 

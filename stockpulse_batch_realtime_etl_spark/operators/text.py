@@ -404,8 +404,6 @@ def tfidf_top_terms(docs: DataFrame, k: int = 5) -> DataFrame:
     over doc_id.  Score = tf · ln(N/df) in doubles of exact ints — bit
     reproducible across engines; ties pinned by term.
     """
-    import uuid
-
     toks = (
         fan_out(docs)
         .select("doc_id", F.explode(_norm_token_arr()).alias("token"))
@@ -413,20 +411,15 @@ def tfidf_top_terms(docs: DataFrame, k: int = 5) -> DataFrame:
     )
     tf = toks.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
     df_tab = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-    # N as a SQL scalar subquery (the _window_filter pattern): one
+    # N as a scalar subquery (the _window_filter pattern): one
     # cluster-side count folded into the projection — the DataFrame
     # crossJoin alternative plans a BroadcastNestedLoopJoin stage.
-    tfdf = tf.join(F.broadcast(df_tab), "token")
-    tag = uuid.uuid4().hex[:12]
-    tfdf.createOrReplaceTempView(f"tfidf_{tag}")
-    docs.createOrReplaceTempView(f"tfidf_docs_{tag}")
-    scored = docs.sparkSession.sql(
-        f"""
-        SELECT doc_id, token, tf,
-               round(tf * ln(CAST((SELECT count(*) FROM tfidf_docs_{tag})
-                                  AS DOUBLE) / df), 6) AS tfidf
-        FROM tfidf_{tag}
-        """
+    n_docs = docs.select(F.count(F.lit(1))).scalar().cast("double")
+    scored = tf.join(F.broadcast(df_tab), "token").select(
+        "doc_id",
+        "token",
+        "tf",
+        F.round(F.col("tf") * F.ln(n_docs / F.col("df")), 6).alias("tfidf"),
     )
     w = Window.partitionBy("doc_id").orderBy(
         F.col("tfidf").desc(), F.col("token").asc()

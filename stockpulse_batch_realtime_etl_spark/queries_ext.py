@@ -757,14 +757,6 @@ def q_label_centroid_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The vectorized scale path (similarity.brute_force_topk_np) was a
-# registered query through r9; it is bit-identical to ann_brute_force_topk
-# (same oracle, same rows) so the registration was retired in r10 to keep
-# the registry at 150 = a perfect 3-round gate rotation (r9 verdict #5).
-# The equivalence is still pinned as a test (tests/test_similarity.py) and
-# the function remains the ANN-ladder recall-truth engine.
-
-
 _BUCKET_SQL = " + ".join(
     f"(CASE WHEN embedding[{i + 1}] >= 0 THEN {1 << i} ELSE 0 END)" for i in range(8)
 )
@@ -3072,7 +3064,7 @@ def q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """recall@5 of IVF-multiprobe, IVF-PQ, and sign-LSH against exact
     brute force — same parameterizations as their standalone queries."""
     emb = load_table(spark, sf_dir, "embeddings")
-    truth = similarity.brute_force_topk_np(emb, _QUERY_IDS, 5)
+    truth = similarity.brute_force_topk(emb, _QUERY_IDS, 5)
     # resolve the adaptive cell count ONCE — passing ncells=None to both
     # rungs would trigger two redundant embeddings.count() jobs
     ncells = similarity.adaptive_ncells_search(emb.count())
@@ -3090,9 +3082,10 @@ def q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- streaming observability: metrics percentile summary --------------------
 # The reference publishes p50/p95/p99 latency histograms via Prometheus
-# (main.py:47-67); the Spark-native analog summarizes StreamingQueryListener
-# per-batch progress.  Gated deterministically: the probe run batches one
-# micro-batch PER EVENT DAY (one corpus file per day + maxFilesPerTrigger=1),
+# (main.py:47-67); the Spark-native analog summarizes the streaming query's
+# own per-batch progress record (recentProgress).  Gated deterministically:
+# the probe run batches one micro-batch PER EVENT DAY (one corpus file per
+# day + maxFilesPerTrigger=1),
 # so per-batch num_input_rows is the per-day corpus line count and DuckDB
 # replays the whole summary — exact interpolated percentiles on both sides —
 # from `events` with one GROUP BY.
@@ -3115,7 +3108,7 @@ FROM daily
 )
 def q_streaming_metrics_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """p50/p95/p99 over per-micro-batch input rows from a real bounded
-    streaming run, captured by the ProgressMetricsListener."""
+    streaming run, read from the query's ``recentProgress``."""
     from stockpulse_batch_realtime_etl_spark.streaming import metrics
     from stockpulse_batch_realtime_etl_spark.streaming.job import (
         run_metrics_probe,

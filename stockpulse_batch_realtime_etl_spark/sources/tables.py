@@ -19,9 +19,6 @@ from pyspark.sql import functions as F
 
 from stockpulse_batch_realtime_etl_spark.schemas import TESTDATA_TABLES
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
 def _ensure_session_confs(spark: SparkSession) -> None:
     """Make table reads self-sufficient on ANY SparkSession, not just one
     built by :func:`stockpulse_batch_realtime_etl_spark.session.get_spark`.
@@ -74,7 +71,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def fan_out(df: DataFrame, min_factor: int = 2) -> DataFrame:
+def fan_out(df: DataFrame) -> DataFrame:
     """Round-robin repartition a NARROW scan up to cluster parallelism before
     a compute-heavy stage (shingle explode, per-token hashing, mapInPandas).
 
@@ -84,12 +81,13 @@ def fan_out(df: DataFrame, min_factor: int = 2) -> DataFrame:
     round-robin exchange of the (MB-scale) input buys full parallelism for
     the expensive stage.
 
-    Guarded: when the source already has ≥ parallelism/min_factor partitions
-    (the 100 TB case — real tables have thousands of row groups), this is a
-    no-op, so no gratuitous shuffle is ever added at scale.
+    Guarded: when the source already has more than half as many partitions
+    as the cluster parallelism (the 100 TB case — real tables have
+    thousands of row groups), this is a no-op, so no gratuitous shuffle is
+    ever added at scale.
     """
     target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() * min_factor <= target:
+    if df.rdd.getNumPartitions() * 2 <= target:
         return df.repartition(target)
     return df
 

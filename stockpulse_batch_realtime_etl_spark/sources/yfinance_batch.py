@@ -9,9 +9,9 @@ no ``price`` field; downstream the engine treats ``price := close``
 Live network access is out of correctness scope, so the connector is
 driven by a RECORDED fixture replicating the yf.download row shape
 (cached mode ``source='yfinance'``, poll mode ``'yfinance_poll'``,
-producer_yfinance.py:100-109 / 139-147).  When the real library is
-importable the same code path accepts its frames — the seam is one
-function argument, not a fork.
+producer_yfinance.py:100-109 / 139-147).  Rows fetched live by any other
+means take the same path — the seam is one function argument
+(``yfinance_ticks(spark, rows)``), not a fork.
 
 Scale note: a market-data poll is dimension-sized (symbols × minutes),
 so driver-side pandas → ``createDataFrame`` is the right shape; the big
@@ -47,35 +47,6 @@ YFINANCE_FIXTURE: list[dict[str, Any]] = [
      "close": 142.60, "volume": 410_900,
      "event_time": "2024-01-15T14:30:00+00:00", "source": "yfinance_poll"},
 ]
-
-
-def fetch_live(symbols: list[str]) -> list[dict[str, Any]] | None:
-    """Fetch one wide row per symbol via yfinance, or None when the library
-    (or the network) is unavailable — callers fall back to the fixture."""
-    try:  # pragma: no cover - yfinance not installed in the test container
-        import yfinance as yf
-    except ImportError:
-        return None
-    data = yf.download(  # pragma: no cover
-        " ".join(symbols), period="1d", interval="1m",
-        progress=False, group_by="ticker",
-    )
-    if data is None or data.empty:  # pragma: no cover
-        return None
-    rows: list[dict[str, Any]] = []  # pragma: no cover
-    for sym in symbols:  # pragma: no cover
-        latest = data[sym].dropna().iloc[-1]
-        rows.append({
-            "symbol": sym,
-            "open": round(float(latest["Open"]), 2),
-            "high": round(float(latest["High"]), 2),
-            "low": round(float(latest["Low"]), 2),
-            "close": round(float(latest["Close"]), 2),
-            "volume": int(latest["Volume"]),
-            "event_time": latest.name.isoformat(),
-            "source": "yfinance",
-        })
-    return rows  # pragma: no cover
 
 
 def yfinance_ticks(

@@ -601,9 +601,8 @@ def run_running_bars_available_now(
     fold per-symbol running OHLCV state across micro-batches, and return
     the FINAL running bar per symbol.
 
-    The operator is ``streaming.stateful.running_bars`` (the GroupState
-    form); its ``transformWithState`` twin shares the fold but cannot run
-    here (see ``stateful.running_bars_tws``).
+    The operator is ``streaming.stateful.running_bars``
+    (``applyInPandasWithState``).
 
     Update-mode emission yields one row per active symbol per batch; the
     final answer is the row with the highest tick_count per symbol
@@ -676,8 +675,8 @@ def run_metrics_probe(
     spark: SparkSession, sf_dir: str, base_dir: str | None = None
 ) -> DataFrame:
     """Bounded streaming run with DETERMINISTIC micro-batching, returning
-    the listener-captured per-batch progress table — the substrate for
-    :func:`metrics.percentile_summary`'s oracle-gated summary.
+    the query's per-batch progress table (``recentProgress``) — the
+    substrate for :func:`metrics.percentile_summary`'s oracle-gated summary.
 
     Determinism: the corpus is written one text FILE PER EVENT DAY
     (repartition("day") + partitionBy("day") → exactly one file per day),
@@ -693,9 +692,7 @@ def run_metrics_probe(
     main.py:47-67) does not depend on the transformation, and the cheapest
     pipeline keeps the 30-batch bounded run fast at any sf.
     """
-    import json
-    import time as _time
-
+    from stockpulse_batch_realtime_etl_spark.sources.tables import literal_df
     from stockpulse_batch_realtime_etl_spark.streaming import metrics
 
     # the gated summary counts only rows>0 batches (and the oracle counts
@@ -707,72 +704,30 @@ def run_metrics_probe(
     n_days = len(
         [d for d in os.listdir(corpus_dir) if d.startswith("day=")]
     )
-    # size the listener ring to the batch count: the default 256 would
-    # silently evict the earliest day-batches at larger sf.  It listens on
-    # the run session, so it sees this run's batches and no one else's.
-    listener = metrics.attach(run, max_batches=max(256, 2 * n_days))
-    try:
-        q = (
-            raw_json_stream(run, corpus_dir, max_files_per_trigger=1)
-            .select("value")
-            .writeStream.queryName("metrics_probe")
-            .format("noop")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # listener events are delivered on the async listener bus — wait for
-        # all day-batches (bounded), then fall back to the query's own
-        # synchronous recentProgress for any stragglers (identical rows,
-        # keyed by batch_id)
-        deadline = _time.monotonic() + 30
-        def _probe_rows():
-            return [r for r in listener.snapshot() if r["num_input_rows"] > 0]
-        while len(_probe_rows()) < n_days and _time.monotonic() < deadline:
-            _time.sleep(0.2)
-        rows = {r["batch_id"]: r for r in _probe_rows()}
-        if len(rows) < n_days:  # pragma: no cover - listener-bus straggler
-            for p in q.recentProgress:
-                p = json.loads(p) if isinstance(p, str) else p
-                if p.get("numInputRows", 0) > 0:
-                    rows.setdefault(
-                        p["batchId"],
-                        {
-                            "query_name": "metrics_probe",
-                            "batch_id": p["batchId"],
-                            "num_input_rows": p["numInputRows"],
-                            "input_rows_per_second": float(
-                                p.get("inputRowsPerSecond") or 0.0
-                            ),
-                            "process_rows_per_second": float(
-                                p.get("processedRowsPerSecond") or 0.0
-                            ),
-                            "batch_duration_ms": p.get("batchDuration", 0),
-                            "state_rows": 0,
-                        },
-                    )
-    finally:
-        metrics.detach(run, listener)
+    # the query keeps its progress records itself; size its retention to
+    # the batch count (Spark keeps one fewer than the conf, and the default
+    # 100 would evict the earliest day-batches at larger sf)
+    run.conf.set("spark.sql.streaming.numRecentProgressUpdates", str(2 * n_days))
+    q = (
+        raw_json_stream(run, corpus_dir, max_files_per_trigger=1)
+        .select("value")
+        .writeStream.queryName("metrics_probe")
+        .format("noop")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    rows = metrics.progress_rows(p for p in q.recentProgress if p.numInputRows)
     if len(rows) < n_days:
         raise RuntimeError(
-            f"metrics probe captured {len(rows)}/{n_days} day-batches — "
-            "listener-bus + recentProgress retention both fell short; a "
+            f"metrics probe captured {len(rows)}/{n_days} day-batches — a "
             "silently truncated progress table would skew the gated "
             "percentile summary with nothing pointing at the cause"
         )
-    from stockpulse_batch_realtime_etl_spark.sources.tables import literal_df
-
     # literal_df, not createDataFrame: the ~30-row progress table would
     # otherwise evaluate as core-count pickled Python-RDD tasks downstream
-    return literal_df(
-        spark,
-        [
-            tuple(r[k.split(" ")[0]] for k in metrics.PROGRESS_SCHEMA.split(", "))
-            for r in rows.values()
-        ],
-        metrics.PROGRESS_SCHEMA,
-    )
+    return literal_df(spark, rows, metrics.PROGRESS_SCHEMA)
 
 
 def symbol_sector_dim(spark: SparkSession, sf_dir: str) -> DataFrame:

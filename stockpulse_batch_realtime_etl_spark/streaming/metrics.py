@@ -4,27 +4,19 @@ request latency counters at /metrics).
 
 In a Spark engine the equivalent operational signal is per-micro-batch
 progress: input rate, processing rate, batch duration, and state-store
-size.  Spark already emits all of it through ``StreamingQueryListener``;
-this module captures those events into a bounded in-memory ring and renders
-them as a DataFrame, so "metrics" is just one more queryable table instead
-of an HTTP sidecar.  A real deployment would forward the same events to a
-PushGateway/StatsD sink from ``onQueryProgress`` — the seam is the single
-``_record`` call.
-
-Driver-side state is a deque of small dicts (bounded, default 256 batches)
-— no executor involvement, no extra jobs; listener callbacks run on the
-driver's listener bus thread exactly like Spark's own UI consumers.
+size.  Spark already keeps all of it on each query as
+``StreamingQuery.recentProgress`` (the last
+``spark.sql.streaming.numRecentProgressUpdates`` batches, recorded
+synchronously as each batch finishes); this module maps those records to
+rows, so "metrics" is just one more queryable table instead of an HTTP
+sidecar.  No executor involvement, no extra jobs: the records live on the
+driver.
 """
 
 from __future__ import annotations
 
-import collections
-import json
-from typing import Any
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.listener import StreamingQueryListener
 
 PROGRESS_SCHEMA = (
     "query_name string, batch_id long, num_input_rows long, "
@@ -33,64 +25,21 @@ PROGRESS_SCHEMA = (
 )
 
 
-class ProgressMetricsListener(StreamingQueryListener):
-    """Capture per-batch progress events into a bounded ring buffer."""
-
-    def __init__(self, max_batches: int = 256) -> None:
-        self._events: collections.deque[dict[str, Any]] = collections.deque(
-            maxlen=max_batches
+def progress_rows(progress) -> list[tuple]:
+    """Map a query's progress records (``StreamingQuery.recentProgress``)
+    to ``PROGRESS_SCHEMA`` tuples, one per micro-batch, in record order."""
+    return [
+        (
+            p.name or str(p.id),
+            p.batchId,
+            p.numInputRows or 0,
+            float(p.inputRowsPerSecond or 0.0),
+            float(p.processedRowsPerSecond or 0.0),
+            p.batchDuration,
+            sum(op.numRowsTotal for op in p.stateOperators),
         )
-
-    # -- StreamingQueryListener interface ------------------------------
-    def onQueryStarted(self, event) -> None:  # noqa: N802 (Spark API)
-        pass
-
-    def onQueryProgress(self, event) -> None:  # noqa: N802
-        p = json.loads(event.progress.json)
-        ops = p.get("stateOperators") or []
-        self._record(
-            {
-                "query_name": p.get("name") or p.get("id"),
-                "batch_id": p.get("batchId", -1),
-                "num_input_rows": p.get("numInputRows", 0),
-                "input_rows_per_second": float(
-                    p.get("inputRowsPerSecond") or 0.0
-                ),
-                "process_rows_per_second": float(
-                    p.get("processedRowsPerSecond") or 0.0
-                ),
-                "batch_duration_ms": p.get("batchDuration", 0),
-                "state_rows": sum(
-                    op.get("numRowsTotal", 0) for op in ops
-                ),
-            }
-        )
-
-    def onQueryTerminated(self, event) -> None:  # noqa: N802
-        pass
-
-    def onQueryIdle(self, event) -> None:  # noqa: N802
-        pass
-
-    # -- export --------------------------------------------------------
-    def _record(self, row: dict[str, Any]) -> None:
-        self._events.append(row)
-
-    def snapshot(self) -> list[dict[str, Any]]:
-        return list(self._events)
-
-    def to_df(self, spark: SparkSession) -> DataFrame:
-        from stockpulse_batch_realtime_etl_spark.sources.tables import (
-            literal_df,
-        )
-
-        rows = self.snapshot()
-        cols = PROGRESS_SCHEMA.split(", ")
-        names = [c.split(" ")[0] for c in cols]
-        # literal_df, not createDataFrame: no Python-RDD parallelize tasks
-        return literal_df(
-            spark, [tuple(r[n] for n in names) for r in rows], PROGRESS_SCHEMA
-        )
+        for p in progress
+    ]
 
 
 def percentile_summary(
@@ -100,8 +49,8 @@ def percentile_summary(
 ) -> DataFrame:
     """p50/p95/p99 (exact, interpolated) over one captured per-batch metric
     — the reference's Prometheus histogram summary (main.py:66-67) as a
-    query.  Exact ``percentile`` not approx: listener volumes are bounded
-    by the ring buffer (≤256 batches), so there is nothing to sketch.
+    query.  Exact ``percentile`` not approx: one row per micro-batch of a
+    bounded run is a small table, so there is nothing to sketch.
 
     Works on any PROGRESS_SCHEMA column: ``num_input_rows`` (deterministic
     for deterministic batching — the oracle-gated path) or
@@ -119,14 +68,3 @@ def percentile_summary(
         F.sum(metric).cast("long").alias("total"),
         *cols,
     )
-
-
-def attach(spark: SparkSession, max_batches: int = 256) -> ProgressMetricsListener:
-    """Register a fresh listener on the session's stream manager."""
-    listener = ProgressMetricsListener(max_batches)
-    spark.streams.addListener(listener)
-    return listener
-
-
-def detach(spark: SparkSession, listener: ProgressMetricsListener) -> None:
-    spark.streams.removeListener(listener)

@@ -45,15 +45,15 @@ _EMPTY_STATE = (
 
 
 def fold_bar_state(state: tuple | None, pdfs) -> tuple:
-    """The ONE running-OHLCV fold shared by both stateful-API exemplars.
+    """The running-OHLCV fold.
 
     ``state`` is the 8-slot tuple of :data:`STATE_SCHEMA` (or ``None`` for
     a fresh key); ``pdfs`` is an iterator of Arrow-batched pandas frames
     with ``event_time``/``price``/``volume`` columns.  Returns the merged
-    state tuple.  Keeping this in one place means the GroupState and the
-    transformWithState exemplars cannot silently diverge on a future edit
-    (only the GroupState twin runs end-to-end in this container — see the
-    SANDBOX SEAM note on :class:`RunningBarProcessor`).
+    state tuple.  Kept apart from the GroupState plumbing so the same body
+    carries over to another stateful API (``transformWithStateInPandas``
+    needs ``google.protobuf`` for its Python runner, which this build
+    lacks).
     """
     f_ts, o, h, low, l_ts, c, vol, cnt = (
         state if state is not None else _EMPTY_STATE
@@ -109,68 +109,4 @@ def running_bars(ticks: DataFrame) -> DataFrame:
         STATE_SCHEMA,
         "update",
         GroupStateTimeout.NoTimeout,
-    )
-
-
-from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-
-class RunningBarProcessor(StatefulProcessor):
-    """The SAME running-OHLCV fold as :func:`running_bars`, expressed in the
-    Spark 4 arbitrary-state API (``transformWithStateInPandas`` /
-    ``StatefulProcessor``): typed, named state variables managed through a
-    ``StatefulProcessorHandle`` instead of one opaque ``GroupState`` tuple.
-
-    Why carry both: ``applyInPandasWithState`` is the Spark 3.4+ form this
-    module's docstring motivates; ``transformWithState`` is its successor —
-    composable state variables (value/list/map), TTL, timers, and initial-
-    state bootstrap — and the shape new operators should take.  Both
-    exemplars call the one :func:`fold_bar_state` body, so they cannot
-    diverge.
-
-    SANDBOX SEAM: the TWS Python runner speaks a protobuf protocol to the
-    JVM state server, and ``google.protobuf`` is absent from this container
-    (verified: STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE →
-    ``ImportError: cannot import name 'descriptor' from 'google.protobuf'``;
-    pip installs are out of scope).  So only the ``applyInPandasWithState``
-    twin runs end-to-end here (driver-gated as ``streaming_running_bars``);
-    THIS processor's fold is exercised by driving ``handleInputRows``
-    directly against a stub ValueState in tests/test_stateful.py — exact
-    under any batch split, same property the gated twin proves.  No bounded
-    runner selects it; see :func:`running_bars_tws` for what a caller must
-    set up.
-    """
-
-    def init(self, handle) -> None:
-        self._bar = handle.getValueState("bar", STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        (symbol,) = key
-        merged = fold_bar_state(
-            self._bar.get() if self._bar.exists() else None, rows
-        )
-        self._bar.update(merged)
-        yield _bar_row(symbol, merged)
-
-    def close(self) -> None:
-        pass
-
-
-def running_bars_tws(ticks: DataFrame) -> DataFrame:
-    """ticks stream → running OHLCV per symbol per micro-batch, via the
-    Spark 4 ``transformWithStateInPandas`` API (``timeMode="None"`` — the
-    running bar never expires, exactly like the GroupStateTimeout.NoTimeout
-    twin above).
-
-    UNVERIFIED SEAM: no test runs it end-to-end (its Python runner needs
-    ``google.protobuf``; see :class:`RunningBarProcessor`).  It runs only
-    on the RocksDB provider, so the caller must start the query from a
-    session with ``spark.sql.streaming.stateStore.providerClass`` set to
-    ``org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider``
-    — the package's default is Spark's HDFS-backed store."""
-    return ticks.groupBy("symbol").transformWithStateInPandas(
-        statefulProcessor=RunningBarProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
     )

@@ -197,6 +197,56 @@ def test_dup_groups_methods_identical(make_docs):
     assert a == b
 
 
+def test_observed_count_falls_back_when_metric_never_lands(spark, monkeypatch):
+    """A metric that never arrives (its action never ran) ends the wait at
+    the deadline with the explicit fallback count instead of blocking; a
+    metric that did land is returned without running the fallback."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    monkeypatch.setattr(dedup, "_OBSERVATION_WAIT_S", 0.3)
+    calls = []
+
+    def counting(df):
+        def fallback():
+            calls.append(df)
+            return df.count()
+
+        return fallback
+
+    lost = Observation()
+    never_run = spark.range(7).observe(lost, F.count(F.lit(1)).alias("n"))
+    assert not lost._jo.getRowOrEmpty().isDefined()
+    assert dedup._observed(lost, "n", counting(never_run)) == 7
+    assert calls == [never_run]
+
+    landed = Observation()
+    ran = spark.range(5).observe(landed, F.count(F.lit(1)).alias("n"))
+    ran = ran.localCheckpoint()
+    assert dedup._observed(landed, "n", counting(ran)) == 5
+    assert calls == [never_run]  # fallback not run
+
+
+def test_cc_kernels_exact_on_fallback_counts(spark, monkeypatch):
+    """With no wait at all, every convergence count in both kernels comes
+    from its explicit fallback count; the fixpoint must not change."""
+    from stockpulse_batch_realtime_etl_spark.operators.dedup import (
+        _cc_min_label,
+        _cc_star,
+    )
+
+    monkeypatch.setattr(dedup, "_OBSERVATION_WAIT_S", 0.0)
+    chain = [(i, i + 1) for i in range(1, 9)]
+    triangles = [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12), (10, 12)]
+    for pairs, want in [
+        (chain, {(i, 1) for i in range(1, 10)}),
+        (triangles, {(i, 1) for i in (1, 2, 3)} | {(i, 10) for i in (10, 11, 12)}),
+    ]:
+        e = _edges_df(spark, pairs)
+        assert {(r.doc_id, r.group_id) for r in _cc_min_label(e, 30).collect()} == want
+        assert {(r.doc_id, r.group_id) for r in _cc_star(e, 30).collect()} == want
+
+
 # --- quality-aware survivor selection ----------------------------------------
 
 def test_dedup_survivors_picks_best_quality(make_docs):

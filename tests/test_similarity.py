@@ -99,16 +99,6 @@ def test_ivf_topk_searches_own_cell_only(embeddings):
     assert ivf_scores == brute_scores
 
 
-def test_brute_force_np_matches_hof_exactly(embeddings):
-    hof = sorted(
-        map(tuple, similarity.brute_force_topk(embeddings, [0, 3], k=4).collect())
-    )
-    np_ = sorted(
-        map(tuple, similarity.brute_force_topk_np(embeddings, [0, 3], k=4).collect())
-    )
-    assert hof == np_  # same doubles, same rounding, same tie-breaks
-
-
 def test_ivf_kmeans_zero_iters_equals_training_free(embeddings):
     """With no Lloyd rounds the k-means IVF must reproduce the seed-centroid
     IVF exactly (same quantizer, same search skeleton)."""

@@ -96,55 +96,39 @@ def test_running_bars_state_carries_across_batches(spark, dirs):
     assert m["open"] == m["close"] == 1.0 and m["tick_count"] == 1
 
 
-# --- transformWithState twin: direct-drive (no streaming runtime) -----------
-# The TWS Python runner needs google.protobuf (absent in this container), so
-# the processor's fold is verified by driving handleInputRows directly with a
-# stub ValueState — the same exact-under-any-batch-split property the gated
-# applyInPandasWithState twin proves end-to-end.
+# --- the fold, driven directly (no streaming runtime) ----------------------
+class _StubGroupState:
+    """The slice of ``GroupState`` that ``stateful._fold`` touches."""
 
-class _StubValueState:
     def __init__(self):
         self._v = None
 
+    @property
     def exists(self):
         return self._v is not None
 
+    @property
     def get(self):
         return self._v
 
     def update(self, v):
         self._v = v
 
-    def clear(self):
-        self._v = None
 
-
-class _StubHandle:
-    def __init__(self):
-        self.state = _StubValueState()
-
-    def getValueState(self, name, schema, ttlDurationMs=None):
-        return self.state
-
-
-def _drive(proc_cls, batches):
+def _drive(batches):
     import pandas as pd
 
-    proc = proc_cls()
-    proc.init(_StubHandle())
+    from stockpulse_batch_realtime_etl_spark.streaming import stateful
+
+    state = _StubGroupState()
     out = None
     for pdf in batches:
-        out = pd.concat(list(proc.handleInputRows(("AAPL",), iter([pdf]), None)))
-    proc.close()
+        out = pd.concat(list(stateful._fold(("AAPL",), iter([pdf]), state)))
     return out.iloc[-1]
 
 
-def test_tws_fold_matches_batch_aggregate_under_any_split():
+def test_fold_matches_batch_aggregate_under_any_split():
     import pandas as pd
-
-    from stockpulse_batch_realtime_etl_spark.streaming.stateful import (
-        RunningBarProcessor,
-    )
 
     rows = pd.DataFrame(
         {
@@ -161,40 +145,15 @@ def test_tws_fold_matches_batch_aggregate_under_any_split():
         open=11.0, close=10.5, high=12.0, low=9.5, volume_sum=650,
         tick_count=5,
     )
-    # every contiguous 2-way split AND the all-at-once case must agree
-    splits = [[rows]] + [
-        [rows.iloc[:i].reset_index(drop=True), rows.iloc[i:].reset_index(drop=True)]
-        for i in range(1, len(rows))
-    ]
-    for batches in splits:
-        last = _drive(RunningBarProcessor, batches)
+    # every way to cut the rows into contiguous batches (all 2^(n-1) cut
+    # sets, the all-at-once case included) must agree
+    n = len(rows)
+    for mask in range(1 << (n - 1)):
+        cuts = [0] + [i for i in range(1, n) if mask >> (i - 1) & 1] + [n]
+        batches = [
+            rows.iloc[a:b].reset_index(drop=True)
+            for a, b in zip(cuts, cuts[1:])
+        ]
+        last = _drive(batches)
         for k, v in expected.items():
-            assert last[k] == v, (k, batches)
-
-
-def test_tws_and_apply_folds_share_semantics():
-    # the two exemplars' fold bodies must agree on the same input
-    import pandas as pd
-
-    from stockpulse_batch_realtime_etl_spark.streaming import stateful
-
-    pdf = pd.DataFrame(
-        {
-            "event_time": pd.to_datetime(["2024-01-01 09:30", "2024-01-01 09:31"]),
-            "price": [10.0, 20.0],
-            "volume": [1, 2],
-        }
-    )
-    tws = _drive(stateful.RunningBarProcessor, [pdf])
-
-    class _GS:  # minimal GroupState stub for the applyInPandasWithState fold
-        exists = False
-        get = None
-
-        def update(self, v):
-            self.stored = v
-
-    rows = list(stateful._fold(("AAPL",), iter([pdf]), _GS()))
-    apply_row = rows[0].iloc[0]
-    for k in ("open", "high", "low", "close", "volume_sum", "tick_count"):
-        assert apply_row[k] == tws[k], k
+            assert last[k] == v, (k, cuts)

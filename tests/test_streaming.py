@@ -185,37 +185,35 @@ def test_streaming_dedup_collapses_redelivered_rows(spark):
     assert total == distinct > 0
 
 
-def test_metrics_listener_captures_progress(spark, tmp_path):
-    """Prometheus-analog (reference main.py:47-67): the progress listener
-    records one row per micro-batch with rate/duration/state columns."""
+def test_progress_rows_map_recent_progress(spark, tmp_path):
+    """Prometheus-analog (reference main.py:47-67): a query's own progress
+    record maps to one PROGRESS_SCHEMA row per micro-batch with
+    rate/duration/state columns — read synchronously once the run ends."""
     from stockpulse_batch_realtime_etl_spark.streaming import metrics
 
     src = tmp_path / "src"
     src.mkdir()
     (src / "b.jsonl").write_text("\n".join(BATCH1))
-    listener = metrics.attach(spark)
-    try:
-        raw = job.raw_json_stream(spark, str(src))
-        ticks, _ = job.tick_stream_from_raw(raw)
-        q = job.start_bar_aggregation(
-            ticks.select("symbol", "price", "volume", "event_time"),
-            str(tmp_path / "bars"), str(tmp_path / "ckpt"),
-            watermark="10 minutes", available_now=True,
-        )
-        q.awaitTermination(120)
-        # listener bus is async — wait briefly for delivery
-        import time
-
-        for _ in range(40):
-            if listener.snapshot():
-                break
-            time.sleep(0.25)
-    finally:
-        metrics.detach(spark, listener)
-    rows = listener.to_df(spark).collect()
-    assert rows, "no progress events captured"
-    assert any(r.num_input_rows > 0 for r in rows)
-    assert all(r.batch_id >= 0 for r in rows)
+    raw = job.raw_json_stream(spark, str(src))
+    ticks, _ = job.tick_stream_from_raw(raw)
+    q = job.start_bar_aggregation(
+        ticks.select("symbol", "price", "volume", "event_time"),
+        str(tmp_path / "bars"), str(tmp_path / "ckpt"),
+        watermark="10 minutes", available_now=True,
+    )
+    q.awaitTermination(120)
+    progress = q.recentProgress
+    rows = spark.createDataFrame(
+        metrics.progress_rows(progress), metrics.PROGRESS_SCHEMA
+    ).collect()
+    assert [r.batch_id for r in rows] == [p.batchId for p in progress]
+    assert rows[0].batch_id == 0
+    # BATCH1 is one file: its first batch reads all 6 lines, and the
+    # windowed aggregate holds one state row per (symbol, minute) bar
+    assert rows[0].num_input_rows == len(BATCH1)
+    assert rows[0].state_rows == 3
+    assert all(r.query_name == str(q.id) for r in rows)  # unnamed query
+    assert all(r.batch_duration_ms >= 0 for r in rows)
 
 
 def test_streaming_session_bars_match_batch_sessionization(spark):
@@ -267,8 +265,8 @@ def test_percentile_summary_exact_interpolation(spark):
 
 
 def test_metrics_probe_batches_are_days(spark):
-    """One micro-batch per event day, listener-captured: 30 batches whose
-    input rows sum to the full corpus."""
+    """One micro-batch per event day, read from the query's progress
+    record: 30 batches whose input rows sum to the full corpus."""
     from stockpulse_batch_realtime_etl_spark.streaming.job import (
         run_metrics_probe,
     )
@@ -871,10 +869,7 @@ def test_concurrent_bounded_runs_match_oracles(spark):
     on it — both equal their DuckDB oracles."""
     from concurrent.futures import ThreadPoolExecutor
 
-    import duckdb
-
     import __spark_entry__ as entry_mod
-    from stockpulse_batch_realtime_etl_spark.schemas import TESTDATA_TABLES
 
     sf = "/root/testdata/sf0.001"
     names = ["streaming_dedup_ticks", "streaming_pair_join_outer"]
@@ -887,15 +882,25 @@ def test_concurrent_bounded_runs_match_oracles(spark):
     with ThreadPoolExecutor(max_workers=2) as pool:
         got = dict(zip(names, pool.map(run, names)))
 
+    for name in names:
+        want = _oracle_rows(sf, name)
+        assert got[name] == want and want, name
+
+
+def _oracle_rows(sf, name):
+    """The DuckDB oracle's rows for registered query ``name``, normalized."""
+    import duckdb
+
+    import __spark_entry__ as entry_mod
+    from stockpulse_batch_realtime_etl_spark.schemas import TESTDATA_TABLES
+
     con = duckdb.connect()
     for t in TESTDATA_TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"
         )
-    for name in names:
-        rel = con.execute(entry_mod.oracle_sql()[name])
-        want = _norm_rows([d[0] for d in rel.description], rel.fetchall())
-        assert got[name] == want and want, name
+    rel = con.execute(entry_mod.oracle_sql()[name])
+    return _norm_rows([d[0] for d in rel.description], rel.fetchall())
 
 
 _BAR_COLS = (
@@ -998,3 +1003,42 @@ def test_upsert_exactly_once_after_injected_failure(spark, tmp_path, monkeypatch
     }
     assert got == want and len(want) == 8
 
+
+@pytest.mark.parametrize(
+    "name", ["streaming_dedup_ticks", "streaming_pair_join_outer"]
+)
+def test_file_sink_run_exactly_once_after_uncommitted_batch(
+    spark, monkeypatch, name
+):
+    """The runner's own file-sink writer runs to the end; its last
+    commit-log entry is then deleted, so that batch's output is in the sink
+    but the batch is not committed.  Restarting the same writer from the
+    same checkpoint replays the batch; the output equals the uninterrupted
+    run and the DuckDB oracle."""
+    import os
+
+    import __spark_entry__ as entry_mod
+
+    real = job._drain
+    seen = {}
+
+    def drain_then_restart(caller, writer, out_dir, ckpt):
+        seen["clean"] = sorted(map(tuple, real(caller, writer, out_dir, ckpt).collect()))
+        commits = os.path.join(ckpt, "commits")
+        last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+        for f in (str(last), f".{last}.crc"):
+            if os.path.exists(os.path.join(commits, f)):
+                os.remove(os.path.join(commits, f))
+        assert os.path.exists(os.path.join(ckpt, "offsets", str(last)))
+        restarted = real(caller, writer, out_dir, ckpt)
+        seen["replayed"] = os.path.exists(os.path.join(commits, str(last)))
+        seen["restarted"] = sorted(map(tuple, restarted.collect()))
+        return restarted
+
+    monkeypatch.setattr(job, "_drain", drain_then_restart)
+    sf = "/root/testdata/sf0.001"
+    df = entry_mod.queries()[name](spark, sf)
+    assert seen["replayed"]  # the restart re-ran and committed the batch
+    assert seen["restarted"] == seen["clean"]
+    want = _oracle_rows(sf, name)
+    assert _norm_rows(df.columns, df.collect()) == want and want

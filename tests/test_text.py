@@ -174,6 +174,19 @@ def test_tfidf_top_terms_closed_form(make_docs):
     assert rows[(3, "cherry")].tf == 3
 
 
+def test_tfidf_top_terms_no_catalog_growth(docs):
+    """tfidf_top_terms registers nothing in the catalog (N is a
+    ``DataFrame.scalar()`` subquery, as in ``serving._window_filter``): a
+    long-lived session calling it repeatedly must not accumulate temp
+    views, and every returned plan must execute."""
+    spark = docs.sparkSession
+    before = {t.name for t in spark.catalog.listTables()}
+    dfs = [text.tfidf_top_terms(docs) for _ in range(20)]
+    after = {t.name for t in spark.catalog.listTables()}
+    assert after == before  # zero growth, not merely bounded
+    assert dfs[0].count() > 0 and dfs[-1].count() > 0
+
+
 def test_bigram_counts(make_docs):
     from stockpulse_batch_realtime_etl_spark.operators.text import bigram_counts
 
